@@ -15,15 +15,30 @@ of import, not of call shape:
   returns the merged-neighbor rows the server's JSON ``merged_neighbors``
   field carries, already globally merged (O27/O28 — the multi-server
   fan-out collapses into partitions of one DataFrame).
+
+Like the reference's server, which keeps its leader index in memory and
+routes each request before any scan (neighborhood_server.py:181-185,
+200-203), ``search`` holds the centroid matrix on the driver. An engine
+object pulls it once, on its first ``search``, and keeps it: the engine is
+a snapshot of the index tables, the centroids never change after
+``build_index``, and a reader sees later writes by reopening the engine
+(``add_batch`` returns a new one). At the reference's design point
+(nlist 31,622 x 512-d) the matrix is about 130 MB of doubles, the same
+matrix the ``numpy`` routing kernel collects on every call. The batch
+verbs keep Spark-side routing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import threading
 
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from .functions.vector import cosine_distance, lit_array
 from .operators.knn import ivf_search
+from .operators.knn_numpy import _collect_centroids, _route_topn_core
 
 #: The reference's request/limit defaults (neighborhood_server.py:312,
 #: :417-421; nearest_neighbor_client.py:13).
@@ -41,6 +56,8 @@ class VectorSearchEngine:
         self.corpus = spark.read.parquet(f"{index_dir}/corpus")
         self.centroids = spark.read.parquet(f"{index_dir}/centroids")
         self.id_mapping = spark.read.parquet(f"{index_dir}/id_mapping")
+        self._leader: tuple[np.ndarray, np.ndarray] | None = None
+        self._leader_lock = threading.Lock()
 
     # -- search (POST /search analog) ------------------------------------
 
@@ -52,31 +69,47 @@ class VectorSearchEngine:
     ) -> DataFrame:
         """One query vector -> merged neighbors ``(id, distance)`` rows,
         routed to ``nprobe`` partitions, ``top_n`` per partition, globally
-        merged ascending by distance (O22-O28)."""
-        q = self.spark.createDataFrame(
-            [(0, [float(x) for x in query_vector])],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("qv", T.ArrayType(T.DoubleType())),
-                ]
-            ),
+        merged ascending by ``(distance, id)`` and cut to 100 (O22-O28).
+
+        Routing runs on the driver over the held leader (module
+        docstring): the first call pulls the centroid matrix in one small
+        job, every call ranks it with the ``numpy`` routing core (round-9
+        distances, exact ``(distance, partition_id)`` order). The corpus
+        scan then carries a static ``partition_id IN (...)``, so only the
+        probed partitions are listed and read. Rows equal ``ivf_search``'s
+        for the same query: ``nprobe <= 0`` or ``top_n <= 0`` returns no
+        rows, ``nprobe > nlist`` probes every partition, and the limit
+        keeps the first 100 by ``(distance, neighbor_id)``, as its rank
+        filter does.
+        """
+        q = [float(x) for x in query_vector]
+        with self._leader_lock:
+            if self._leader is None:
+                self._leader = _collect_centroids(self.centroids, "partition_id", "centroid")
+            pids, cmat = self._leader
+        probed = _route_topn_core(np.array([q]), pids, cmat, nprobe)[0]
+        scored = self.corpus.filter(F.col("partition_id").isin(probed.tolist())).select(
+            "partition_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine_distance(lit_array(q), F.col("embedding")).alias("distance"),
         )
-        hits = ivf_search(
-            q,
-            self.corpus,
-            self.centroids,
-            nprobe=nprobe,
-            top_n=top_n,
-            global_limit=GLOBAL_MAX_NEIGHBORS,
-        )
+        by_distance = (F.col("distance").asc(), F.col("neighbor_id").asc())
+        w_local = Window.partitionBy("partition_id").orderBy(*by_distance)
         # O25 id remap: hits carry vec_id, whose original_id is its string
         # form by construction (build_id_mapping) — the join degenerates to
         # a cast here; against an external id space it would be
         # hits.join(id_mapping, ["partition_id", "faiss_id"]).
-        return hits.select(
-            F.col("neighbor_id").cast("string").alias("id"), "distance"
-        ).orderBy(F.col("distance").asc(), F.col("id").asc())
+        # The limit cuts by the numeric id, as ivf_search's rank does; the
+        # final sort (local: the limit leaves one partition) orders the
+        # kept rows by the string id.
+        return (
+            scored.withColumn("local_rank", F.row_number().over(w_local))
+            .filter(F.col("local_rank") <= top_n)
+            .orderBy(*by_distance)
+            .limit(GLOBAL_MAX_NEIGHBORS)
+            .select(F.col("neighbor_id").cast("string").alias("id"), "distance")
+            .orderBy(F.col("distance").asc(), F.col("id").asc())
+        )
 
     def search_batch(self, queries: DataFrame, top_n: int = DEFAULT_TOP_N, nprobe: int = DEFAULT_NPROBE) -> DataFrame:
         """X3: the same search lifted to a query table."""

@@ -135,11 +135,15 @@ def _collect_centroids(centroids: DataFrame, pid_col: str, vec_col: str):
     contract at extreme n) this collect is itself the scale problem —
     the distributed tier (knn_routed.py) replaces it with a capped
     router sample and never materializes the table on the driver.
+
+    The pid sort runs here, not in Spark: an ``orderBy`` on an nlist-row
+    table costs a range-sampling job and a shuffle on every call.
     """
-    rows = centroids.select(pid_col, vec_col).orderBy(pid_col).collect()
+    rows = centroids.select(pid_col, vec_col).collect()
     pids = np.array([r[0] for r in rows], dtype=np.int64)
     cmat = np.array([r[1] for r in rows], dtype=np.float64)
-    return pids, cmat
+    order = np.argsort(pids, kind="stable")
+    return pids[order], cmat[order]
 
 
 def _best_centroid_core(
@@ -691,6 +695,54 @@ def argmax_centroid_numpy(
     )
 
 
+def _route_topn_core(
+    qmat: "np.ndarray",
+    bpids: "np.ndarray",
+    bC: "np.ndarray",
+    nprobe: int,
+    tile_elems: "int | None" = None,
+) -> "np.ndarray":
+    """Numeric core of top-``nprobe`` routing — both engines of
+    route_queries_numpy and the driver-side router of
+    ``api.VectorSearchEngine.search`` call EXACTLY this. ``bpids`` must be
+    pid-ascending (as _collect_centroids returns it). Returns the
+    (b, min(nprobe, k)) int32 pid matrix in exact (d, pid) lexicographic
+    order per row; ``nprobe <= 0`` selects no partition, ``nprobe > k``
+    every one. ``tile_elems`` defaults to this process's _TILE_ELEMS; a
+    Spark stage passes the driver's value, since a worker re-imports the
+    module."""
+    b = qmat.shape[0]
+    k = len(bpids)
+    take = max(0, min(nprobe, k))
+    if take == 0:
+        return np.empty((b, 0), dtype=np.int32)
+    tile = _TILE_ELEMS if tile_elems is None else tile_elems
+    cblock = max(take, min(k, tile // max(b, 1)))
+    cand_d: list[np.ndarray] = []
+    cand_p: list[np.ndarray] = []
+    for s in range(0, k, cblock):
+        dblk = 1.0 - qmat @ bC[s : s + cblock].T  # b x cblock
+        np.round(dblk, 9, out=dblk)
+        t = min(take, dblk.shape[1])
+        # Stable per-block (distance, pid) truncation: column index
+        # ascends with pid (bpids is pid-sorted, the block slice is
+        # contiguous) and a stable argsort keeps ascending-column
+        # order among equal distances — so a boundary tie can never
+        # evict a smaller-pid centroid before the global (d, pid)
+        # lexsort below sees it. argpartition picked an arbitrary
+        # member among >t boundary ties, diverging from the expr
+        # kernel exactly at the reference's nlist=31,622 design
+        # point (neighborhood_server.py:181-185 routing order).
+        idx = np.argsort(dblk, axis=1, kind="stable")[:, :t]  # b x t
+        cand_d.append(np.take_along_axis(dblk, idx, axis=1))
+        cand_p.append(bpids[s + idx])
+    dall = np.concatenate(cand_d, axis=1)  # b x (t*blocks)
+    pall = np.concatenate(cand_p, axis=1)
+    # Exact (d, pid) lexicographic order over the candidate pool.
+    order = np.lexsort((pall, dall), axis=1)[:, :take]
+    return np.take_along_axis(pall, order, axis=1).astype(np.int32)
+
+
 def route_queries_numpy(
     queries: DataFrame,
     centroids: DataFrame,
@@ -715,6 +767,7 @@ def route_queries_numpy(
     _check_engine(engine)
     pids, cmat = _collect_centroids(centroids, pid_col, centroid_vec_col)
     bc = queries.sparkSession.sparkContext.broadcast((pids, cmat))
+    tile_elems = _TILE_ELEMS
     out_schema = T.StructType(
         [
             next(f for f in queries.schema.fields if f.name == query_id_col),
@@ -724,47 +777,15 @@ def route_queries_numpy(
         ]
     )
 
-    def _route_topn_core(qmat: "np.ndarray", bpids: "np.ndarray", bC: "np.ndarray"):
-        """Numeric core — both engines call EXACTLY this. Returns the
-        (b, take) int32 pid matrix in exact (d, pid) lexicographic order
-        per row."""
-        b = qmat.shape[0]
-        k = len(bpids)
-        take = min(nprobe, k)
-        cblock = max(take, min(k, _TILE_ELEMS // max(b, 1)))
-        cand_d: list[np.ndarray] = []
-        cand_p: list[np.ndarray] = []
-        for s in range(0, k, cblock):
-            dblk = 1.0 - qmat @ bC[s : s + cblock].T  # b x cblock
-            np.round(dblk, 9, out=dblk)
-            t = min(take, dblk.shape[1])
-            # Stable per-block (distance, pid) truncation: column index
-            # ascends with pid (bpids is pid-sorted, the block slice is
-            # contiguous) and a stable argsort keeps ascending-column
-            # order among equal distances — so a boundary tie can never
-            # evict a smaller-pid centroid before the global (d, pid)
-            # lexsort below sees it. argpartition picked an arbitrary
-            # member among >t boundary ties, diverging from the expr
-            # kernel exactly at the reference's nlist=31,622 design
-            # point (neighborhood_server.py:181-185 routing order).
-            idx = np.argsort(dblk, axis=1, kind="stable")[:, :t]  # b x t
-            cand_d.append(np.take_along_axis(dblk, idx, axis=1))
-            cand_p.append(bpids[s + idx])
-        dall = np.concatenate(cand_d, axis=1)  # b x (t*blocks)
-        pall = np.concatenate(cand_p, axis=1)
-        # Exact (d, pid) lexicographic order over the candidate pool.
-        order = np.lexsort((pall, dall), axis=1)[:, :take]
-        return np.take_along_axis(pall, order, axis=1).astype(np.int32)
-
     def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bpids, bC = bc.value
-        take = min(nprobe, len(bpids))
         for pdf in batches:
             b = len(pdf)
             if not b:
                 continue
             qmat = np.array(list(pdf[query_vec_col]), dtype=np.float64)  # b x d
-            sel = _route_topn_core(qmat, bpids, bC)
+            sel = _route_topn_core(qmat, bpids, bC, nprobe, tile_elems)
+            take = sel.shape[1]
             out_rows = {
                 query_id_col: np.repeat(pdf[query_id_col].to_numpy(), take),
                 query_vec_col: [
@@ -784,13 +805,13 @@ def route_queries_numpy(
 
     def route_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bpids, bC = bc.value
-        take = min(nprobe, len(bpids))
         for rb in batches:
             b = rb.num_rows
             if not b:
                 continue
             qmat = _list_matrix(rb.column(1))
-            sel = _route_topn_core(qmat, bpids, bC)
+            sel = _route_topn_core(qmat, bpids, bC, nprobe, tile_elems)
+            take = sel.shape[1]
             # The query id/vector columns replicate via Arrow take on a
             # repeated row index — no per-row Python list of vectors (the
             # pandas path's one remaining boxing site).

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The directory holding the ``bioclip_vector_db_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "bioclip_vector_db_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -22,6 +25,9 @@ def get_spark(app_name: str = "bioclip_vector_db_spark", cpus: int | None = None
       would be ~2-3x total executor cores (AQE coalesces the excess).
     - Arrow on: every pandas_udf crosses the JVM/Python boundary in
       columnar batches instead of pickled rows.
+    - Serial GC in the driver JVM, which in local mode is the only JVM:
+      its heap follows the live set, so peak memory is a function of the
+      work rather than of host load (see the comment at the setting).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
@@ -40,6 +46,12 @@ def get_spark(app_name: str = "bioclip_vector_db_spark", cpus: int | None = None
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # G1, the JVM's default, grows the heap when recent pauses pass a
+        # share of wall time, so on a busy host one perfbench serve run
+        # peaked anywhere from 1.2 to 1.7 GB RSS. The serial collector sizes
+        # the heap from the live data after each collection, so the peak
+        # follows the work; on 4 cores it did not slow requests or set-up.
+        .config("spark.driver.extraJavaOptions", "-XX:+UseSerialGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The events fixture stores TIMESTAMP(NANOS) which Spark's parquet
@@ -73,5 +85,17 @@ def get_spark(app_name: str = "bioclip_vector_db_spark", cpus: int | None = None
                 "a SparkSession predates this get_spark() call; run the "
                 "sweep in a fresh process"
             )
+    # Python workers import the engine to run its Arrow/pandas kernels, and
+    # a driver that found the package through its own sys.path does not
+    # pass that on: with PYTHONPATH unset and the working directory outside
+    # the checkout, those stages fail with ModuleNotFoundError.
+    # SparkContext.environment holds every spark.executorEnv.* setting and
+    # ships with each Python function, so prepending the package root there
+    # keeps any value already set and also covers a session getOrCreate
+    # reused rather than built.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     spark.sparkContext.setLogLevel("WARN")
     return spark
